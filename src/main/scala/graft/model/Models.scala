@@ -27,9 +27,11 @@ final case class UaInfo(
     ua_human: String,
     ua_intent: String)
 
-/** Flat parse output. Mirrors the reference's SBOHttpRequestLog
-  * (logparsers/httpservers.go:40-61) with the nested SBOUserAgent inlined
-  * (flat columns prune/filter better in Parquet + Catalyst).
+/** One parsed line. Mirrors the reference's SBOHttpRequestLog
+  * (logparsers/httpservers.go:40-61). The parse stage exposes it to
+  * Catalyst as flat columns with the nested SBOUserAgent inlined
+  * (org.apache.spark.sql.graft.ParseTurn.schema; flat columns prune and
+  * filter better in Parquet + Catalyst).
   *
   * Conventions kept from Go zero values: unset strings are "" (not null);
   * `ua` is None exactly where the reference leaves the pointer nil (Apache
@@ -56,60 +58,6 @@ final case class ParsedFields(
     ua: Option[UaInfo],
     malicious: Int,
     format: String)
-
-/** Flat parsed row: provenance + every derived field. The parse stage emits
-  * this via a typed mapPartitions, which guarantees the branchy per-row parse
-  * runs EXACTLY once per row (a Catalyst-expression parse is either collapsed
-  * / predicate-pushed into multiple evaluations when deterministic, or kills
-  * whole-stage codegen for the fused stage when marked nondeterministic —
-  * both measured slower; see ParseStage).
-  */
-final case class ParsedTurn(
-    conv_id: String,
-    turn_idx: Int,
-    role: String,
-    tool: String,
-    ts: Timestamp,
-    text: String,
-    domain: String,
-    client_ip: String,
-    remote_logname: String,
-    remote_user: String,
-    log_ts: Option[Timestamp],
-    tz_offset_sec: Int,
-    method: String,
-    path: String,
-    path1: String,
-    path2: String,
-    path3: String,
-    protocol: String,
-    status: String,
-    bytes_sent: Long,
-    referer: String,
-    ua_full: Option[String],
-    ua_os: Option[String],
-    ua_family: Option[String],
-    ua_device_type: Option[String],
-    ua_human: Option[String],
-    ua_intent: Option[String],
-    malicious: Int,
-    format: String)
-
-object ParsedTurn {
-  def apply(t: TranscriptTurn, p: ParsedFields): ParsedTurn = ParsedTurn(
-    conv_id = t.conv_id, turn_idx = t.turn_idx, role = t.role, tool = t.tool,
-    ts = t.ts, text = t.text,
-    domain = p.domain, client_ip = p.client_ip,
-    remote_logname = p.remote_logname, remote_user = p.remote_user,
-    log_ts = p.log_ts, tz_offset_sec = p.tz_offset_sec,
-    method = p.method, path = p.path, path1 = p.path1, path2 = p.path2,
-    path3 = p.path3, protocol = p.protocol, status = p.status,
-    bytes_sent = p.bytes_sent, referer = p.referer,
-    ua_full = p.ua.map(_.ua_full), ua_os = p.ua.map(_.ua_os),
-    ua_family = p.ua.map(_.ua_family), ua_device_type = p.ua.map(_.ua_device_type),
-    ua_human = p.ua.map(_.ua_human), ua_intent = p.ua.map(_.ua_intent),
-    malicious = p.malicious, format = p.format)
-}
 
 object Malicious {
   // reference: logparsers/httpservers.go:31-38

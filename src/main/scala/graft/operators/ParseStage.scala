@@ -1,33 +1,43 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
-
-import graft.model.{ParsedTurn, TranscriptTurn}
-import graft.parse.LineParser
+import org.apache.spark.sql.graft.{Bridge, ParseTurn}
+import org.apache.spark.sql.types.LongType
 
 /** The parse stage: one single-pass struct parse per row (SURVEY.md §2
-  * P1-P12), as a typed mapPartitions over Dataset[TranscriptTurn].
+  * P1-P12), as a Catalyst `Generate` node driven by the `ParseTurn`
+  * generator over `text`.
   *
   * Why not per-column `regexp_extract`: the built-in re-runs the regex for
-  * every projected field (SURVEY.md §4). Why not a struct-returning Catalyst
-  * UDF: measured both ways —
-  *  - deterministic UDF: CollapseProject / predicate pushdown can inline the
-  *    alias and re-evaluate the UDF per reference;
-  *  - `asNondeterministic()` UDF: single evaluation, but any stage fused with
-  *    a Nondeterministic expression loses whole-stage codegen, which made the
-  *    downstream explode+aggregate pipeline ~12x slower (4s → 46s at sf0.1).
-  * The object-level mapPartitions guarantees exactly-once per-row parsing,
-  * keeps every operator above the serialization boundary codegen'd, and the
-  * encoder's serializer is itself code-generated.
+  * every projected field (SURVEY.md §4). Why a Generate:
+  *  - Generate is a plan node, so the parse runs exactly once per input row.
+  *    A struct-returning UDF does not: as a deterministic expression,
+  *    CollapseProject and predicate pushdown inline its alias and evaluate
+  *    it once per reference; marked `asNondeterministic()`, it evaluates
+  *    once but takes whole-stage codegen away from the whole fused stage,
+  *    which made the downstream explode + aggregate ~12x slower (4 s → 46 s
+  *    at sf0.1).
+  *  - Unlike a typed `mapPartitions` over Dataset[TranscriptTurn], Catalyst
+  *    sees through it. ColumnPruning reaches the parquet scan (a query that
+  *    reads only `role` and the parse fields scans `[role, text]`), and
+  *    scan → parse → route → partial aggregate fuse into one whole-stage
+  *    codegen stage. The mapPartitions hop cost more than the parse itself:
+  *    a row copy of every input column, String and Timestamp decoding of the
+  *    provenance columns, a 29-field object per row and its re-encoding.
+  *  - The generator's rows encode a field only when a consumer reads it, so
+  *    parse columns no query references are never materialized.
   */
 object ParseStage {
 
   val provenanceCols: Seq[String] = Seq("conv_id", "turn_idx", "role", "tool", "ts", "text")
 
-  /** transcripts(conv_id, turn_idx, role, text, tool, ts) → flat parsed DF.
-    * Unparseable lines are dropped (the reference counts them as errors and
-    * emits nothing, main.go:753-756 / :789).
+  /** transcripts(conv_id, turn_idx, role, text, tool, ts) → flat parsed DF:
+    * the provenance columns, then `ParseTurn.schema`. Unparseable lines and
+    * null texts are dropped (the reference counts them as errors and emits
+    * nothing, main.go:753-756 / :789).
     *
     * quirk=true reproduces main.go:744's variable shadowing end-to-end: the
     * format-detection line — the first line (in turn order) of each
@@ -36,14 +46,8 @@ object ParseStage {
     * divergence, SURVEY.md §2 P1).
     */
   def parse(transcripts: DataFrame, keepText: Boolean = true, quirk: Boolean = false): DataFrame = {
-    val spark = transcripts.sparkSession
-    import spark.implicits._
-    val flat = transcripts
-      .select(provenanceCols.head, provenanceCols.tail: _*)
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"), col("tool"), col("ts"))
-      .as[TranscriptTurn]
-      .mapPartitions(_.flatMap(t => LineParser.parseAuto(t.text).map(p => ParsedTurn(t, p))))
-      .toDF()
+    val flat = transcripts.select(
+      provenanceCols.map(col) :+ Bridge.column(ParseTurn(Bridge.expression(col("text")))): _*)
     val quirked =
       if (!quirk) flat
       else {
@@ -74,24 +78,37 @@ object ParseStage {
 
   /** Event-time window as int64 yyyyMMddHHmm, minute floored to the window
     * size, computed in the event's own UTC offset — exact integer semantics
-    * of metricgenerator.go:131-158. Null timestamp → the Go zero-time window.
+    * of metricgenerator.go:131-158, independent of the session time zone.
+    * Null timestamp → the Go zero-time window. One codegen'd static call
+    * per row (`windowKey`), not a tree of nested Column arithmetic.
     */
   def timeWindowCol(logTs: Column, tzOffsetSec: Column, windowMinutes: Int = 10): Column = {
     require(Set(1, 5, 10, 15, 30, 60).contains(windowMinutes), s"bad window $windowMinutes")
-    val local = localTs(logTs, tzOffsetSec)
-    val minuteFloored =
-      if (windowMinutes == 60) lit(0L)
-      else (minute(local) - (minute(local) % windowMinutes)).cast("long")
-    // r6 (opt guide §1.2 per-task work): integer date-part arithmetic in
-    // place of date_format("yyyyMMddHH") — the formatter built a per-row
-    // string only to cast it back to long. year/month/day/hour are
-    // codegen'd intrinsics over the same local timestamp, so the int64
-    // yyyyMMddHHmm value is identical for every 4-digit-year date (pinned
-    // vs the Scala oracle in ParseProps/AppSpec and by the DuckDB rows).
-    val ymdh = ((year(local).cast("long") * 100L + month(local)) * 100L +
-      dayofmonth(local)) * 100L + hour(local)
-    coalesce(
-      ymdh * 100L + minuteFloored,
-      lit(101010000L)) // Go zero time "0001010100"+"00" (error ignored at httpservers.go:175)
+    val key = StaticInvoke(getClass, LongType, "windowKey",
+      Seq(Bridge.expression(logTs), Bridge.expression(tzOffsetSec.cast("int")), Literal(windowMinutes)),
+      returnNullable = false)
+    // Go zero time "0001010100"+"00" (error ignored at httpservers.go:175)
+    coalesce(Bridge.column(key), lit(101010000L))
+  }
+
+  /** yyyyMMddHHmm of the local time `tzOffsetSec` east of UTC at
+    * `logTsMicros`, minute floored to `windowMinutes`. Local seconds are
+    * `cast(log_ts as long) + tz_offset_sec`; the date is the civil-from-days
+    * closed form (proleptic Gregorian, like Spark's own date functions).
+    */
+  def windowKey(logTsMicros: Long, tzOffsetSec: Int, windowMinutes: Int): Long = {
+    val local = Math.floorDiv(logTsMicros, 1000000L) + tzOffsetSec
+    val secOfDay = Math.floorMod(local, 86400L)
+    val z = Math.floorDiv(local, 86400L) + 719468L
+    val era = Math.floorDiv(z, 146097L)
+    val doe = z - era * 146097L
+    val yoe = (doe - doe / 1460 + doe / 36524 - doe / 146096) / 365
+    val doy = doe - (365 * yoe + yoe / 4 - yoe / 100)
+    val mp = (5 * doy + 2) / 153
+    val day = doy - (153 * mp + 2) / 5 + 1
+    val month = if (mp < 10) mp + 3 else mp - 9
+    val year = yoe + era * 400 + (if (month <= 2) 1 else 0)
+    val minute = secOfDay % 3600 / 60
+    (((year * 100 + month) * 100 + day) * 100 + secOfDay / 3600) * 100 + (minute - minute % windowMinutes)
   }
 }

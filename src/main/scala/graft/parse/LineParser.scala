@@ -191,12 +191,22 @@ object LineParser {
       }
     }
     // structurally off the fast layout: the strict formatter decides, exactly
-    // like parseTimestamp's tail
+    // like parseTimestamp's tail. It accepts years up to ±999999999, whose
+    // epoch seconds would wrap the packing; outside the range a timestamp
+    // column can hold, the line keeps no timestamp.
     try {
       val o = OffsetDateTime.parse(s, tsFormat)
-      o.toEpochSecond * 131072L + (o.getOffset.getTotalSeconds + 64800L)
+      val sec = o.toEpochSecond
+      if (sec > MaxTsSec || sec < -MaxTsSec) TsNone
+      else sec * 131072L + (o.getOffset.getTotalSeconds + 64800L)
     } catch { case _: Exception => TsNone }
   }
+
+  /** largest |epoch second| tsEpochOff packs: its microseconds fit a long,
+    * as a Spark timestamp needs, with room for the Julian-calendar rebase
+    * the timestamp encoder applies to early dates
+    */
+  private[parse] val MaxTsSec: Long = Long.MaxValue / 1000000L / 2
 
   private def atoi(s: String): Long =
     try s.toLong

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types._
 
 import graft.model.TranscriptTurn
 
@@ -26,6 +27,18 @@ object Tables {
 
   def transcriptsPath(sfDir: String): String = s"$dataRoot/transcripts/${sfName(sfDir)}"
 
+  /** The transcripts table's columns (BASELINE.json `input_hint`). Readers
+    * pass it to `schema(…)`, so no query pays a parquet schema-inference
+    * job.
+    */
+  val transcriptSchema: StructType = StructType(Seq(
+    StructField("conv_id", StringType),
+    StructField("turn_idx", IntegerType),
+    StructField("role", StringType),
+    StructField("text", StringType),
+    StructField("tool", StringType),
+    StructField("ts", TimestampType)))
+
   /** Deterministic synth-on-first-use of the transcripts table for a scale
     * dir. Pure function of the sf name — safe to regenerate anywhere.
     */
@@ -33,7 +46,7 @@ object Tables {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     val path = transcriptsPath(sfDir)
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) synthesize(spark, sfDir, path)
-    spark.read.parquet(path)
+    spark.read.schema(transcriptSchema).parquet(path)
   }
 
   private def synthesize(spark: SparkSession, sfDir: String, path: String): Unit = {

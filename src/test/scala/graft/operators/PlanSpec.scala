@@ -165,6 +165,24 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(p.contains("*("), s"expected whole-stage codegen: ${p.take(600)}")
   }
 
+  test("ingest: scan → parse → route → partial aggregate fuse into one codegen stage reading [role, text]") {
+    import org.apache.spark.sql.functions._
+    val df = Route.withSink(ParseStage.parse(graft.sources.Tables.transcripts(spark, sf)))
+      .groupBy(col("sink"), col("role"),
+        ParseStage.timeWindowCol(col("log_ts"), col("tz_offset_sec")).as("w"))
+      .agg(count(lit(1)), sum(col("bytes_sent")))
+    df.collect() // finalize THIS QueryExecution's adaptive plan
+    val p = df.queryExecution.executedPlan.toString
+    Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject").foreach { n =>
+      assert(!p.contains(n), s"object hop $n in:\n$p")
+    }
+    val generate = """\*\((\d+)\) Generate """.r.findFirstMatchIn(p).map(_.group(1))
+    val partialAgg = """\*\((\d+)\) HashAggregate\(keys=.*partial_count""".r.findFirstMatchIn(p).map(_.group(1))
+    assert(generate.isDefined && generate == partialAgg, s"parse and partial aggregate in different stages:\n$p")
+    val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
+    assert(readSchema.contains("ReadSchema: struct<role:string,text:string>"), readSchema)
+  }
+
   test("salted fan-out exchanges on (conv_id, salt) and sorts within partitions") {
     import org.apache.spark.sql.functions._
     val parsed = ParseStage.parse(graft.sources.Tables.transcripts(spark, sf)).limit(10)

@@ -189,6 +189,23 @@ class LineParserSpec extends AnyFunSuite {
     assert(LineParser.parseTimestamp(aliased).isEmpty)
   }
 
+  test("years past the packable range keep no timestamp instead of wrapping") {
+    // the strict formatter accepts years up to ±999999999; their epoch
+    // seconds times the 2^17 packing factor overflow a long
+    Seq("01/Jan/+999999999:00:00:00 +0000", "31/Dec/-999999999:23:59:59 -1800",
+      "01/Jan/+2000000:00:00:00 +0000").foreach { ts =>
+      assert(LineParser.parseTimestamp(ts).nonEmpty, ts)
+      assert(LineParser.tsEpochOff(ts) == LineParser.TsNone, ts)
+    }
+    val line = """1.2.3.4 - - [01/Jan/+999999999:00:00:00 +0000] "GET / HTTP/1.1" 200 1"""
+    val p = parseAuto(line).get
+    assert(p.log_ts.isEmpty && p.tz_offset_sec == 0 && p.bytes_sent == 1)
+    // inside the range the fallback still packs the exact instant
+    val far = "01/Jan/+100000:00:00:00 +0100"
+    val o = LineParser.parseTimestamp(far).get
+    assert(LineParser.tsEpochOff(far) == o.toEpochSecond * 131072L + (3600 + 64800L))
+  }
+
   test("fastParse handles the reference fixture lines identically to the regex tier") {
     val lines = Seq(
       """127.0.0.1 - frank [10/Oct/2000:13:55:36 -0700] "GET /p1/p2/p3/apache_pb.gif HTTP/1.0" 200 2326""",
