@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.{Aggregates, Enrich, ParseStage, Route}
 import graft.sources.{Tables, TranscriptGen}
@@ -103,7 +104,8 @@ object Bench {
 
   /** WORKLOAD-FAITHFUL calibration: the SAME fixed work the Spark job's
     * dominant stage does — parse `totalLines` access-log lines through the
-    * exact engine parse function (LineParser.parseAuto) — on raw JVM
+    * exact engine parse call (ParseTurn.rows plus the ingest job's field
+    * reads, graft.parse.ParseProfile.ingestParse) — on raw JVM
     * threads, no Spark. The ALU-only cpuRatio overstates the ceiling for
     * parse-shaped work (a spin loop has no memory traffic, so it gets full
     * SMT benefit): measured here, pure-ALU scales ~3.7-4.0× from 8→32
@@ -125,13 +127,10 @@ object Bench {
         var i = t.toLong * per % burnLines.length
         var sink = 0
         while (k < per) {
-          // materialize the line from bytes first: the engine has to build
-          // every text String out of parquet buffers, and that allocation/
-          // copy is exactly the kind of bandwidth-bound work whose thread
-          // scaling is worse than pure parsing — a pooled-String baseline
-          // would omit a cost the job cannot avoid and overstate the ceiling
-          val line = new String(burnLines(i.toInt), java.nio.charset.StandardCharsets.UTF_8)
-          if (graft.parse.LineParser.parseAuto(line).isDefined) sink += 1
+          // the engine's path: a UTF8String view of the line's bytes, as the
+          // parquet column vector hands it over, parsed by the generator's
+          // per-row call plus the ingest job's field reads
+          if (graft.parse.ParseProfile.ingestParse(UTF8String.fromBytes(burnLines(i.toInt))) != 0L) sink += 1
           i += 1; if (i >= burnLines.length) i = 0
           k += 1
         }

@@ -29,6 +29,11 @@ import org.apache.spark.sql.types.LongType
   *    provenance columns, a 29-field object per row and its re-encoding.
   *  - The generator's rows encode a field only when a consumer reads it, so
   *    parse columns no query references are never materialized.
+  *
+  * Inside the generator the parse has two tiers (see ParseTurn): a byte scan
+  * that decides clean log lines straight from the column's UTF-8 bytes,
+  * handing Catalyst views of them and pre-encoded memo values, and the
+  * regex chain for every line the scan does not decide.
   */
 object ParseStage {
 

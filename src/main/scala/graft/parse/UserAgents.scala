@@ -1,6 +1,10 @@
 package graft.parse
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.regex.Pattern
+
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.model.UaInfo
 
 /** User-agent classifier with the exact semantics of the reference's
@@ -71,20 +75,46 @@ object UserAgents {
     }
   }
 
-  /** Memoized classification: UA-string cardinality is tiny relative to row
-    * count (a closed pool here; low thousands in real logs), and classify is
-    * a pure function — the reference memoizes nothing but pays the regex per
-    * line on one goroutine. Bounded: stops inserting past 100k entries.
+  /** A classification as parse-column values: the five enum fields,
+    * pre-encoded (the UA string itself is `ua_full`).
     */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, UaInfo]()
+  final class UaClass private[UserAgents] (base: UaInfo) {
+    val os: UTF8String = encoded(base.ua_os)
+    val family: UTF8String = encoded(base.ua_family)
+    val device: UTF8String = encoded(base.ua_device_type)
+    val human: UTF8String = encoded(base.ua_human)
+    val intent: UTF8String = encoded(base.ua_intent)
 
-  def classify(uaString: String): UaInfo = {
-    val hit = cache.get(uaString)
-    if (hit != null) return hit
-    val r = classifyUncached(uaString)
-    if (cache.size < 100000) cache.put(uaString, r)
-    r
+    /** this class under the robots.txt override, applied after
+      * classification when the request's path1 is "/robots.txt"
+      */
+    lazy val robots: UaClass = new UaClass(robotsOverride(base))
+
+    def info(full: String): UaInfo = base.copy(ua_full = full)
   }
+
+  // the enum values, each encoded once and shared by all memo entries
+  private val encodedEnums = new ConcurrentHashMap[String, UTF8String]()
+  private def encoded(v: String): UTF8String = encodedEnums.computeIfAbsent(v, UTF8String.fromString(_))
+
+  /** Memoized classification, keyed by the UA's UTF-8 bytes (the same
+    * bounded memo as LineParser's URI and referer memos, shared by both
+    * parse tiers): UA-string cardinality is tiny relative to row count (a
+    * closed pool here; low thousands in real logs), and classify is a pure
+    * function — the reference memoizes nothing but pays the regex per line
+    * on one goroutine.
+    */
+  private val cache = new ConcurrentHashMap[UTF8String, UaClass]()
+
+  def classify(ua: UTF8String): UaClass = {
+    val hit = cache.get(ua)
+    if (hit != null) return hit
+    val c = new UaClass(classifyUncached(ua.toString))
+    if (cache.size < LineParser.MemoCap) cache.put(ua.copy(), c)
+    c
+  }
+
+  def classify(uaString: String): UaInfo = classify(UTF8String.fromString(uaString)).info(uaString)
 
   def classifyUncached(uaString: String): UaInfo = {
     val st = new State
@@ -159,10 +189,8 @@ object UserAgents {
     UaInfo(uaString, st.os, st.family, st.device, st.human, st.intent)
   }
 
-  /** robots.txt override — httpservers.go:63-77. Applied after classification
-    * when the request's Path1 is "/robots.txt".
-    */
-  def robotsOverride(ua: UaInfo): UaInfo = {
+  /** robots.txt override — httpservers.go:63-77. */
+  private def robotsOverride(ua: UaInfo): UaInfo = {
     var family = ua.ua_family
     if (family != FamilyAIBot && family != FamilySEOBot && family != FamilyScript &&
       family != FamilySearchBot && family != FamilySocialBot) {

@@ -1,5 +1,7 @@
 package graft.parse
 
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Malicious
@@ -206,7 +208,13 @@ class LineParserSpec extends AnyFunSuite {
     assert(LineParser.tsEpochOff(far) == o.toEpochSecond * 131072L + (3600 + 64800L))
   }
 
-  test("fastParse handles the reference fixture lines identically to the regex tier") {
+  /** the byte scan's verdict on a line: its format, or None (bail) */
+  private def scanned(line: String): Option[Format] = {
+    val b = line.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    Option(scan(b, Platform.BYTE_ARRAY_OFFSET, b.length, new Array[Int](Slots)))
+  }
+
+  test("byte scan handles the reference fixture lines identically to the regex tier") {
     val lines = Seq(
       """127.0.0.1 - frank [10/Oct/2000:13:55:36 -0700] "GET /p1/p2/p3/apache_pb.gif HTTP/1.0" 200 2326""",
       """127.0.0.1 - - [10/Oct/2000:13:55:36 -0700] "GET / HTTP/1.1" 200 612 "-" "Mozilla/5.0 (Macintosh)"""",
@@ -214,18 +222,42 @@ class LineParserSpec extends AnyFunSuite {
       """1.2.3.4 - u [02/Jan/2006:15:04:05 +0000] "GET / HTTP/1.1" 200 1 "r" "ua" 0.1 0.2""",
       """149.102.254.35 - - [23/May/2025:03:53:41 +0000] "GET /wp-content/plugins/helloapx/wp-apxupx.php?apx=upx&utm_source=google&otherparam=1 HTTP/1.1" 301 549 "http://casualgames.dev/wp-content/plugins/helloapx/wp-apxupx.php?apx=upx" "Go-http-client/1.1"""")
     lines.foreach { l =>
-      val fast = Option(LineParser.fastParse(l))
-      assert(fast.isDefined, s"fast tier must decide: $l")
-      assert(fast == LineParser.parseAutoRegex(l), l)
+      val regex = LineParser.parseAutoRegex(l)
+      assert(scanned(l) == regex.map(p => formatsInOrder.find(_.name == p.format).get), s"byte tier must decide: $l")
+      assert(LineParser.parseAuto(l) == regex, l)
     }
-    // unclean shapes bail (null) and the dispatch still answers via regex
+    // unclean shapes bail and the dispatch still answers via regex
     val unclean = Seq(
       "1.2.3.4 -\tu [t] \"G / H\" 1 2", // tab
       """1.2.3.4 - u [t "x"] "G / H" 1 2""", // quote in bracket
-      """1.2.3.4 - u [02/Jan/2006:15:04:05 +0000] "GET / HTTP/1.1" 200 1 "r" "u"a"""") // 7 quotes
+      """1.2.3.4 - u [02/Jan/2006:15:04:05 +0000] "GET / HTTP/1.1" 200 1 "r" "u"a"""", // 7 quotes
+      """1.2.3.4 - ü [02/Jan/2006:15:04:05 +0000] "GET / HTTP/1.1" 200 1 "r" "ua"""") // non-ASCII
     unclean.foreach { l =>
-      assert(LineParser.fastParse(l) == null, s"must bail: $l")
+      assert(scanned(l).isEmpty, s"must bail: $l")
       assert(LineParser.parseAuto(l) == LineParser.parseAutoRegex(l), l)
     }
+  }
+
+  test("memo keys are copies: overwriting the buffer a key was read from keeps the entry") {
+    // each value is read through a view into `buf`, then `buf` is
+    // overwritten: a lookup with the original bytes must hit the same entry
+    // (an aliased key would have changed with the buffer and missed)
+    def viaView[V](value: String, lookup: UTF8String => V): (V, V) = {
+      val buf = ("\"\"" + value + "\"\"").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val first = lookup(UTF8String.fromBytes(buf, 2, buf.length - 4))
+      java.util.Arrays.fill(buf, 'z'.toByte)
+      (first, lookup(UTF8String.fromString(value)))
+    }
+    val (uri1, uri2) = viaView("/memo-key-probe/a/b?utm_source=kept", uriFields)
+    assert(uri2 eq uri1)
+    assert(uri2.path.toString == "/memo-key-probe/a/b" && uri2.p2.toString == "/memo-key-probe/a" &&
+      uri2.utm.toString == "kept")
+    val noUtm = uriFields(UTF8String.fromString("/memo-key-probe"))
+    val (ref1, ref2) = viaView("http://www.memo-key-probe.example/x", referer(noUtm, _))
+    assert(ref2 eq ref1)
+    assert(ref2.toString == "memo-key-probe.example")
+    val (ua1, ua2) = viaView("memo-key-probe/1.0 (compatible; probebot)", UserAgents.classify(_: UTF8String))
+    assert(ua2 eq ua1)
+    assert(ua2.family.toString == "OtherBot")
   }
 }

@@ -1,8 +1,13 @@
 package graft.parse
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.graft.ParseTurn
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
+import graft.model.{ParsedFields, UaInfo}
 import graft.oracle.RefOracle
 import graft.sources.{Tables, TranscriptGen}
 
@@ -62,15 +67,38 @@ object ParseProps extends Properties("graft.parse") {
     }
   }
 
-  // ---------------------------------------------------------------- r6 fast tier
-  property("fastParse decides every generated line, identically to the regex tier") =
-    forAll(genIndex) { i =>
-      val line = TranscriptGen.turn(i, lay).text
-      val fast = Option(LineParser.fastParse(line))
-      val slow = LineParser.parseAutoRegex(line)
-      (Prop(fast.isDefined) :| "clean generator line must not bail") &&
-        (Prop(fast == slow) :| s"fast=$fast slow=$slow line=$line")
-    }
+  // ---------------------------------------------------------------- byte tier
+  /** the 23 parse columns of a generator row, read as Catalyst values */
+  private def rowValues(r: InternalRow): Seq[Any] =
+    ParseTurn.schema.fields.indices.map(i => if (r.isNullAt(i)) null else r.get(i, ParseTurn.schema(i).dataType))
+
+  /** the regex tier's result encoded as the same values, independently of
+    * the generator's row classes
+    */
+  private def regexValues(p: ParsedFields): Seq[Any] = {
+    def u(s: String) = UTF8String.fromString(s)
+    def ua(f: UaInfo => String): Any = p.ua.map(x => u(f(x))).orNull
+    Seq(u(p.domain), u(p.client_ip), u(p.remote_logname), u(p.remote_user),
+      p.log_ts.map(t => DateTimeUtils.fromJavaTimestamp(t): Any).orNull, p.tz_offset_sec,
+      u(p.method), u(p.path), u(p.path1), u(p.path2), u(p.path3), u(p.protocol), u(p.status),
+      p.bytes_sent, u(p.referer), ua(_.ua_full), ua(_.ua_os), ua(_.ua_family),
+      ua(_.ua_device_type), ua(_.ua_human), ua(_.ua_intent), p.malicious, u(p.format))
+  }
+
+  /** `bytes` as a parquet column vector hands them over: a view into a
+    * larger buffer, at an offset, with bytes on either side
+    */
+  private def genView(bytes: Array[Byte]): Gen[UTF8String] = for {
+    pre <- Gen.chooseNum(0, 11)
+    post <- Gen.chooseNum(0, 9)
+    fill <- Gen.oneOf(' ', '"', 'x', '[', '9')
+  } yield {
+    val buf = Array.fill(pre + bytes.length + post)(fill.toByte)
+    System.arraycopy(bytes, 0, buf, pre, bytes.length)
+    UTF8String.fromBytes(buf, pre, bytes.length)
+  }
+
+  private def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
   /** adversarial line soup: fragments with quotes, brackets, dashes, digits,
     * doubled/odd spacing, tabs — everything the clean-shape scanner keys on
@@ -96,6 +124,72 @@ object ParseProps extends Properties("graft.parse") {
       val regex = LineParser.parseAutoRegex(line)
       Prop(now == regex) :| s"line=<$line> fast-dispatch=$now regex=$regex"
     }
+
+  property("byte scan == regex tier on all 23 parse fields, for any bytes at any offset") = {
+    val genLine = genIndex.map(i => TranscriptGen.turn(i, lay).text)
+    // one char of a generated line replaced by a non-ASCII one (NBSP and
+    // U+2028 are \S to the regexes, like any non-ASCII char)
+    val genNonAscii = for {
+      line <- genLine
+      at <- Gen.chooseNum(0, line.length - 1)
+      c <- Gen.oneOf("é", "Ω", "\u00a0", "\u2028", "\ud83d\ude00", "\u0131")
+    } yield utf8(line.substring(0, at) + c + line.substring(at + 1))
+    // one char of a generated line replaced by the whitespace the regexes'
+    // \s knows besides ' '
+    val genCtl = for {
+      line <- genLine
+      at <- Gen.chooseNum(0, line.length - 1)
+      c <- Gen.oneOf("\t", "\n", "\u000b", "\f", "\r")
+    } yield utf8(line.substring(0, at) + c + line.substring(at + 1))
+    // generated lines with one field swapped for an edge value: timestamps
+    // off the layout, out of range or invalid; byte counts past a long; URIs
+    // the path split, malicious class, utm and robots rules treat specially
+    val genTs = for {
+      day <- Gen.oneOf("01", "29", "31", "32", "00", "1")
+      mon <- Gen.oneOf("Jan", "FEB", "aPr", "Xyz", "J0n")
+      year <- Gen.oneOf("0000", "1582", "1900", "2000", "9999", "+100000", "-100000", "+999999999")
+      off <- Gen.oneOf("+0000", "-0700", "+1800", "+1801", "+0060", "0000")
+    } yield s"$day/$mon/$year:12:34:56 $off"
+    val genEdge = for {
+      line <- genLine
+      field <- Gen.chooseNum(0, 2)
+      ts <- genTs
+      bytes <- Gen.oneOf("0", "9223372036854775807", "9223372036854775808", "000000000000000000000042")
+      uri <- Gen.oneOf("/robots.txt", "/a/b/c/d?utm_source=x&y=1", "/x?utm_source=", "*", "mailto:a@b",
+        "/%zz", "/a/../b", "/c?q=<script>", "/i?id='1%20insert", "http://h:80/p/q?r=1", "/%00")
+    } yield {
+      def sub(re: String, by: String) = line.replaceFirst(re, java.util.regex.Matcher.quoteReplacement(by))
+      utf8(field match {
+        case 0 => sub("\\[[^\\]]*\\]", s"[$ts]")
+        case 1 => sub("\" (\\d+) \\d+", "\" 200 " + bytes)
+        case _ => sub("\"(\\S+) \\S+ ", "\"GET " + uri + " ")
+      })
+    }
+    // one byte of a generated line replaced by a byte no valid UTF-8 has
+    // there: a stray continuation byte, a truncated lead byte, 0xff
+    val genMalformed = for {
+      line <- genLine
+      at <- Gen.chooseNum(0, line.length - 1)
+      b <- Gen.oneOf(0x80, 0xbf, 0xc3, 0xe2, 0xff)
+    } yield { val bs = utf8(line); bs(at) = b.toByte; bs }
+    // (bytes, whether the byte scan must decide them)
+    val genBytes: Gen[(Array[Byte], Boolean)] = Gen.frequency(
+      3 -> genLine.map(l => (utf8(l), true)), 2 -> genSoupLine.map(l => (utf8(l), false)),
+      1 -> genNonAscii.map((_, false)), 1 -> genMalformed.map((_, false)),
+      1 -> genCtl.map((_, false)), 2 -> genEdge.map((_, false)))
+    val genInput = for { (bytes, clean) <- genBytes; text <- genView(bytes) } yield (text, clean)
+    forAll(Gen.listOfN(4, genInput)) { inputs =>
+      Prop.all(inputs.map { case (text, clean) =>
+        val pos = new Array[Int](LineParser.Slots)
+        val decided = LineParser.scan(text.getBaseObject, text.getBaseOffset, text.numBytes, pos) != null
+        val line = text.toString
+        val byteTier = ParseTurn.rows(text).map(rowValues).toList
+        val regex = LineParser.parseAutoRegex(line).map(regexValues).toList
+        (Prop(byteTier == regex) :| s"line=<$line> byte tier=$byteTier regex=$regex") &&
+          (Prop(decided || !clean) :| s"a clean generator line must not bail: $line")
+      }: _*)
+    }
+  }
 
   property("tsEpochOff == parseTimestamp (packed epoch + offset) on structured + fuzzed inputs") = {
     val genTs: Gen[String] = for {
@@ -130,11 +224,12 @@ object ParseProps extends Properties("graft.parse") {
       1 -> Gen.listOf(Gen.oneOf("/a", "/", "?", "&", "utm_source=x", "%zz", "%00",
         "..", "'", "<script>", "a", ":", "//h:80")).map(_.mkString))
     forAll(genUri) { uri =>
-      val uf = LineParser.uriFields(uri)
+      val uf = LineParser.uriFields(UTF8String.fromString(uri))
       val (path, p1, p2, p3, mal) = LineParser.pathFields(uri)
       val m = java.util.regex.Pattern.compile("(\\?|&)utm_source=([^&]+)(&|\\z)").matcher(uri)
       val utm = if (m.find()) m.group(2) else null
-      uf == LineParser.UriFields(path, p1, p2, p3, mal, utm)
+      def u(s: String) = UTF8String.fromString(s)
+      uf == LineParser.UriFields(u(path), u(p1), u(p2), u(p3), mal, u(utm))
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.parse
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The 19 active reference test cases, ported verbatim
@@ -121,13 +122,13 @@ class UserAgentsSpec extends AnyFunSuite {
   }
 
   test("robots.txt override marks non-bots as OtherBot") {
-    val chrome = UserAgents.classify(
+    def robots(ua: String) = UserAgents.classify(UTF8String.fromString(ua)).robots.info(ua)
+    val o = robots(
       "Mozilla/5.0 (Macintosh; Intel Mac OS X 10_15_7) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/136.0.0.0 Safari/537.36")
-    val o = UserAgents.robotsOverride(chrome)
     assert(o.ua_family == "OtherBot" && o.ua_human == "NonHuman" && o.ua_device_type == "Script")
-    val gpt = UserAgents.classify(
+    val gpt = robots(
       "Mozilla/5.0 AppleWebKit/537.36 (KHTML, like Gecko); compatible; GPTBot/1.1; +https://openai.com/gptbot")
-    assert(UserAgents.robotsOverride(gpt).ua_family == "AIBot") // bot families kept
+    assert(gpt.ua_family == "AIBot") // bot families kept
   }
 
   test("blex compatible part reproduces the DeviceType=SEOBot reference bug") {
