@@ -180,8 +180,7 @@ object LineParser {
     * parseTimestamp's fast path (same structural gate, same validation —
     * day-of-month per month like LocalDate.of, |offset| <= 18h like
     * ZoneOffset.ofTotalSeconds). A non-ASCII timestamp has more than 26
-    * bytes or fails a range check, so the formatter decides it, as it did
-    * for the old char-level path.
+    * bytes or fails a range check, so the formatter decides it.
     */
   private def tsLayout(base: AnyRef, off: Long, len: Int): Long = {
     def at(i: Int): Int = Platform.getByte(base, off + i)
