@@ -20,31 +20,17 @@ import graft.sources.{Tables, TranscriptGen}
   */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      // size scan splits so every core count runs several task waves: the
-      // sf4 table is 480 × ~3 MB files, and the default 128 MB bin-packing
-      // coalesces them to ~32 splits = ONE wave at 32 cores, where a single
-      // straggler extends the whole job (measured: eff 0.48 → 0.59+ from
-      // this knob alone under identical load)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // the default 100-entry codegen class cache LRU-thrashes on a
-      // 30-query suite: by the time a pass returns to a query, its
-      // generated classes are evicted and the sample pays a 1-2 s Janino
-      // recompile (measured: a6 3.56 s right after 10 other queries,
-      // 1.61 s with this raised — and back to 1.6 on the SECOND run either
-      // way, the recompile signature). Any real multi-query deployment
-      // wants this above its distinct-plan count.
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+  /** The session every timed query runs in: the factory's, with scan
+    * splits sized so every core count runs several task waves — the sf4
+    * table is 480 × ~3 MB files, and the default 128 MB bin-packing
+    * coalesces them to ~32 splits = ONE wave at 32 cores, where a single
+    * straggler extends the whole job (measured: eff 0.48 → 0.59+ from this
+    * knob alone under identical load).
+    */
+  private[graft] def session(cpus: Int): SparkSession = {
+    val s = Sessions.local(cpus)
+    s.conf.set("spark.sql.files.maxPartitionBytes", "16m")
+    s.conf.set("spark.sql.files.openCostInBytes", "1m")
     s
   }
 
@@ -105,7 +91,7 @@ object Bench {
   /** WORKLOAD-FAITHFUL calibration: the SAME fixed work the Spark job's
     * dominant stage does — parse `totalLines` access-log lines through the
     * exact engine parse call (ParseTurn.rows plus the ingest job's field
-    * reads, graft.parse.ParseProfile.ingestParse) — on raw JVM
+    * reads, Profile.ingestParse) — on raw JVM
     * threads, no Spark. The ALU-only cpuRatio overstates the ceiling for
     * parse-shaped work (a spin loop has no memory traffic, so it gets full
     * SMT benefit): measured here, pure-ALU scales ~3.7-4.0× from 8→32
@@ -130,7 +116,7 @@ object Bench {
           // the engine's path: a UTF8String view of the line's bytes, as the
           // parquet column vector hands it over, parsed by the generator's
           // per-row call plus the ingest job's field reads
-          if (graft.parse.ParseProfile.ingestParse(UTF8String.fromBytes(burnLines(i.toInt))) != 0L) sink += 1
+          if (Profile.ingestParse(UTF8String.fromBytes(burnLines(i.toInt))) != 0L) sink += 1
           i += 1; if (i >= burnLines.length) i = 0
           k += 1
         }
@@ -150,15 +136,9 @@ object Bench {
       TranscriptGen.turn(i.toLong, lay).text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.cpus
 
     // warm-up session also materializes the transcripts table so synthesis
     // cost never pollutes a measurement
@@ -212,11 +192,11 @@ object Bench {
       // collecting between passes starts each pass from comparable heap
       // state. (It does NOT close the whole in-session gap — a6 still
       // samples ~2x its fresh-session time mid-bench, recorded in BENCH.md
-      // with the isolated QueryProbe number; the max column keeps the
+      // with its isolated fresh-session number; the max column keeps the
       // spread visible.)
       System.gc()
       headline.map { case (name, fn) =>
-        name -> time {
+        name -> Profile.time {
           try fn(spark, sfDir).count()
           catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
         }
@@ -242,8 +222,7 @@ object Bench {
     val scalingDir = s"/root/testdata/$scalingSf" // name only; table is synthesized
     val scalingTurns = TranscriptGen.turnsFor(scalingSf)
     Tables.transcripts(spark, scalingDir).count() // materialize outside timing
-    spark.stop()
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    Sessions.stop(spark)
     // Noise controls (this host is a shared VM with bursty neighbor load;
     // identical runs can swing 5-20x): SESSION REUSE per block (timed runs
     // pay no session-start/JIT/first-plan cost — fixed seconds land on both
@@ -257,11 +236,8 @@ object Bench {
     rawParseBaseline(wide, 2000000) // JIT + memo-cache warm-up, discarded
     def jobBlock(n: Int, runs: Int): Seq[Double] = {
       val s = session(n)
-      try (1 to runs).map(_ => time(pipelineE2E(s, scalingDir)))
-      finally {
-        s.stop()
-        SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      }
+      try (1 to runs).map(_ => Profile.time(pipelineE2E(s, scalingDir)))
+      finally Sessions.stop(s)
     }
     // MANY SHORT ROUNDS (each ~2 min: raw, job ×2 at narrow, then at wide) so
     // every quantity samples several different noise windows. One global
@@ -270,8 +246,8 @@ object Bench {
     // (~1 s, filtered by the per-block min).
     {
       val s = session(wide)
-      try time(pipelineE2E(s, scalingDir))
-      finally { s.stop(); SparkSession.clearActiveSession(); SparkSession.clearDefaultSession() }
+      try Profile.time(pipelineE2E(s, scalingDir))
+      finally Sessions.stop(s)
     }
     def rawMin(n: Int, runs: Int): Double =
       (1 to runs).map(_ => rawParseBaseline(n, scalingTurns)).min

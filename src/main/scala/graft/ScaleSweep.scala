@@ -153,15 +153,7 @@ object ScaleSweep {
     val docSizes = Seq(5000L, 50000L, 500000L).filter(_ <= maxDocs)
     val embSizes = Seq(2000L, 20000L, 200000L).filter(_ <= maxDocs * 2 / 5)
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
     import spark.implicits._
 
     val jacc = udf((a: Seq[Long], b: Seq[Long]) => Dedup.jaccardSorted(a.toArray, b.toArray))

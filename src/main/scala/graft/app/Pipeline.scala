@@ -229,14 +229,8 @@ object Pipeline {
     val multi = rawCfg.filter(MultiJobConfig.isMultiSource)
     val cfg = if (multi.isEmpty) rawCfg.map(JobConfig.fromJson(_)).getOrElse(JobConfig())
     else JobConfig()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.cpus
+    val spark = graft.Sessions(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"), cpus)
     multi match {
       case Some(json) =>
         val osCfg = MultiJobConfig.osMetricsConfig(json)

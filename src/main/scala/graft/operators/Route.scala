@@ -1,8 +1,11 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -215,9 +218,11 @@ object Route {
     // in-memory inputs (no backing files) all hash alike — the metadata tier
     // is only meaningful for file-backed plans; others go straight to the
     // content tier
-    if (inputFiles.nonEmpty && Files.exists(manifestPath)) {
-      val existing = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-      if (existing.contains(s""""input_files":$metaFp,""")) return existing // resume: no scan at all
+    val existing = readManifest(manifestPath)
+    existing match {
+      case Some((text, m)) if inputFiles.nonEmpty && m.path("input_files").isIntegralNumber &&
+          m.path("input_files").longValue == metaFp => return text // resume: no scan at all
+      case _ =>
     }
     // ONE stats pass: per-(sink, bucket) rows/checksum/min/max, collected as
     // a bounded (sinks × day-buckets) result. The global input fingerprint
@@ -237,20 +242,13 @@ object Route {
     val totalChecksum = groups.map(_.getLong(3)).foldLeft(0L)(_ ^ _)
     val fpJson = s"""{"plan":$planFp,"rows":$totalRows,"checksum":$totalChecksum}"""
 
-    if (Files.exists(manifestPath)) {
-      val existing = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-      if (existing.contains(s""""input":$fpJson""")) {
+    existing match {
+      case Some((_, m)) if m.get("input") == mapper.readTree(fpJson) =>
         // same CONTENT under different file metadata: the written data is
         // valid — skip the write and refresh the metadata fingerprint so
         // the next rerun takes the zero-scan tier
-        val refreshed =
-          if (existing.contains("\"input_files\":"))
-            existing.replaceFirst("\"input_files\":-?\\d+,", s""""input_files":$metaFp,""")
-          else existing.replaceFirst("\\{", s"""{"input_files":$metaFp,""")
-        Files.write(manifestPath, refreshed.getBytes(StandardCharsets.UTF_8),
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-        return refreshed
-      }
+        return writeManifest(manifestPath, metaFp, fpJson, mapper.writeValueAsString(m.get("partitions")))
+      case _ =>
     }
 
     salted(routed.withColumn("bucket", dayBucket), partitions)
@@ -262,10 +260,29 @@ object Route {
       .map(r => s"""{"sink":"${r.getString(0)}","bucket":"${r.getString(1)}","rows":${r.getLong(2)},"checksum":${r.getLong(3)},"min_turn":${r.getInt(4)},"max_turn":${r.getInt(5)}}""")
       .sorted
       .mkString("[", ",", "]")
-    val manifest = s"""{"input_files":$metaFp,"input":$fpJson,"partitions":$perPartition}"""
-    Files.createDirectories(manifestPath.getParent)
-    Files.write(manifestPath, manifest.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    writeManifest(manifestPath, metaFp, fpJson, perPartition)
+  }
+
+  private val mapper = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** The manifest at `path`, as text and as parsed JSON, if it parses and
+    * holds the fields both resume tiers read; a missing, truncated or
+    * otherwise corrupt one is None, so the caller recomputes and rewrites it.
+    */
+  private def readManifest(path: Path): Option[(String, JsonNode)] =
+    Try { val text = Files.readString(path); (text, mapper.readTree(text)) }
+      .filter { case (_, m) => m.path("input").isObject && m.path("partitions").isArray }.toOption
+
+  /** Writes the manifest through a temp file and an atomic rename, so a
+    * crash leaves either the old manifest or the new one, never a prefix.
+    * Returns the manifest JSON.
+    */
+  private def writeManifest(path: Path, metaFp: Long, fpJson: String, partitions: String): String = {
+    val manifest = s"""{"input_files":$metaFp,"input":$fpJson,"partitions":$partitions}"""
+    Files.createDirectories(path.getParent)
+    val tmp = Files.createTempFile(path.getParent, "manifest", ".tmp")
+    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     manifest
   }
 }

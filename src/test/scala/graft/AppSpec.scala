@@ -3,13 +3,20 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.TranscriptTurn
 import graft.operators.{ParseStage, Route}
+import graft.oracle.RefOracle
+import graft.sources.Tables
 
 /** Driver-contract smoke + R2 JSON sink parity. */
 class AppSpec extends AnyFunSuite with SparkTestBase {
 
   test("entry returns rows") {
-    assert(SparkEntry.entry(spark).count() > 0)
+    import spark.implicits._
+    val turns = Tables.transcripts(spark, "/root/testdata/sf0.001").as[TranscriptTurn].collect().toSeq
+    val sinks = SparkEntry.entry(spark).collect()
+    assert(sinks.length == 4, sinks.mkString(", "))
+    assert(sinks.map(_.getAs[Long]("rows")).sum == RefOracle.parseAll(turns).size)
   }
 
   test("every oracleSql key exists in queries") {
@@ -27,7 +34,7 @@ class AppSpec extends AnyFunSuite with SparkTestBase {
 
   test("R2 JSON sink uses Go field names and RFC3339 timestamps (writetofile.go:67-83)") {
     import spark.implicits._
-    val turns = Seq(graft.model.TranscriptTurn(
+    val turns = Seq(TranscriptTurn(
       "c1", 0, "user",
       """127.0.0.1 - frank [10/Oct/2000:13:55:36 -0700] "GET /a/b HTTP/1.0" 200 2326 "http://www.example.com/s.html" "curl/8.5.0"""",
       "", new java.sql.Timestamp(0L))).toDS().toDF()
@@ -43,7 +50,7 @@ class AppSpec extends AnyFunSuite with SparkTestBase {
     assert(json.contains(""""Malicious":0"""))
     assert(json.contains(""""IsOutOfOrder":false"""))
     // UTC offset renders as Z like Go's RFC3339
-    val utcTurn = Seq(graft.model.TranscriptTurn(
+    val utcTurn = Seq(TranscriptTurn(
       "c1", 0, "user",
       """1.1.1.1 - - [23/May/2025:03:53:41 +0000] "GET / HTTP/1.1" 200 5 "-" "curl/8.5.0"""",
       "", new java.sql.Timestamp(0L))).toDS().toDF()

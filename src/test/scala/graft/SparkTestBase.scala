@@ -8,12 +8,5 @@ trait SparkTestBase {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.host", "localhost")
-    .getOrCreate()
+  lazy val session: SparkSession = Sessions("local[4]", 8)
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -208,6 +210,23 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val files2 = new java.io.File(dir + "/data").listFiles().map(_.getName).toSet
     assert(files1 == files2)
     assert(m1.contains("\"sink\":\"relevant\""))
+  }
+
+  test("lineage fan-out rewrites the data when the manifest is truncated") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage3")
+    val routed = Route.withSink(ParseStage.parse(Tables.transcripts(spark, "/root/testdata/sf0.001")))
+    val m1 = Route.fanOutWithLineage(routed, dir.toString, partitions = 8)
+    def parquetFiles = java.nio.file.Files.walk(dir.resolve("data")).iterator.asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+    val written = parquetFiles
+    // a crash mid-write of a non-atomic manifest leaves this prefix, which
+    // still holds the zero-scan tier's input fingerprint
+    val manifest = dir.resolve("_lineage").resolve("manifest.json")
+    java.nio.file.Files.writeString(manifest, m1.take(m1.indexOf("\"input\":")))
+    val m2 = Route.fanOutWithLineage(routed, dir.toString, partitions = 8)
+    assert(parquetFiles.nonEmpty && (parquetFiles intersect written).isEmpty, "data not rewritten")
+    assert(m2 == m1 && java.nio.file.Files.readString(manifest) == m1)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper().readTree(m2).path("partitions").size > 0)
   }
 
   test("lineage fan-out reads the input at most twice (stats pass + write)") {
